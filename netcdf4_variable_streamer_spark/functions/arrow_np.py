@@ -20,7 +20,17 @@ def column_i64(batch, name: str) -> np.ndarray:
 
 
 def list_matrix_f64(batch, name: str) -> np.ndarray:
-    """Fixed-width list<float> column -> (n, d) float64 matrix.
+    """Fixed-width list<float> column -> (n, d) float64 matrix."""
+    return _list_matrix(batch, name).astype(np.float64, copy=False)
+
+
+def list_matrix_i64(batch, name: str) -> np.ndarray:
+    """Fixed-width list<long> column -> (n, d) int64 matrix."""
+    return _list_matrix(batch, name).astype(np.int64, copy=False)
+
+
+def _list_matrix(batch, name: str) -> np.ndarray:
+    """Fixed-width list column -> (n, d) matrix of its value type.
 
     `flatten()` yields the offset-corrected value buffer (no per-row
     Python); the reshape is only valid for uniform row lengths, which is
@@ -31,9 +41,9 @@ def list_matrix_f64(batch, name: str) -> np.ndarray:
     n = len(col)
     flat = col.flatten().to_numpy(zero_copy_only=False)
     if n == 0:
-        return np.empty((0, 0), dtype=np.float64)
+        return np.empty((0, 0), dtype=flat.dtype)
     offsets = np.diff(col.offsets.to_numpy(zero_copy_only=False))
     d = int(offsets[0])
     if not (offsets == d).all():
         raise ValueError(f"ragged list column {name!r}: lengths vary")
-    return flat.reshape(n, d).astype(np.float64, copy=False)
+    return flat.reshape(n, d)

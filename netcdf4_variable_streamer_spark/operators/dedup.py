@@ -812,18 +812,13 @@ def q_dedup_semantic_trained(
         _with_norm,
     )
 
-    # this key re-checkpoints the cast assignment itself below (the
-    # r18 train-once contract), and consumes nothing else from the
-    # chain — chain-internal checkpoints would only add eager
-    # plannings (round 19, see _pqt_chain)
-    _, _, assign, _ = _civf_chain(
-        spark, sf_dir, nlist=_SEM_NLIST, ckpt=frozenset()
-    )
-    # Train ONCE: the (vec_id, cluster) assignment feeds both branches
-    # of the within-cluster self-join. localCheckpoint (lazy) cuts the
-    # lineage so the Lloyd subtree materializes exactly once by
-    # CONTRACT — before round 18 that dedup was only ReusedExchange
-    # luck, which AQE re-planning can and does break. Round-18
+    _, _, assign, _ = _civf_chain(spark, sf_dir, nlist=_SEM_NLIST)
+    # Assign ONCE: the (vec_id, cluster) assignment feeds both branches
+    # of the within-cluster self-join. The Lloyd rounds already ran on
+    # the driver's collected codebooks; localCheckpoint (lazy) makes the
+    # final assign pass materialize exactly once by CONTRACT — before
+    # round 18 that dedup was only ReusedExchange luck, which AQE
+    # re-planning can and does break. Round-18
     # re-measurement (count(), best-of-3, 500 → 5000 vectors): the 10×
     # premium over the untrained twin is NOT double derivation — a
     # single training chain alone scales 1.48 → 3.59 s while the whole

@@ -23,6 +23,7 @@ the order immune to 1-ulp cross-engine drift, vec_id makes it total.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1169,15 +1170,17 @@ def q_sim_ivf_nprobe_sweep(
 
 _PQT_C = 16  # trained codebook size per subspace
 _PQT_ITERS = 2  # Lloyd rounds (the measured recall optimum at C=16)
-_PQT_PACK = 64  # packed-argmin base, > _PQT_C
+_PQT_PACK = 64  # oracle packed-argmin base, > _PQT_C
 
 
 def _train_once(df: DataFrame) -> DataFrame:
     """Train-once plan contract (round 19, guide §3.3/§5; the round-18
     SemDeDup precedent at ``operators/dedup.py``): lazy
-    ``localCheckpoint`` on a trained artifact (centroid table, codebook,
-    assignment) so every downstream plan branch reads the SAME
-    materialized result instead of re-deriving the Lloyd subtree —
+    ``localCheckpoint`` on a multi-consumer artifact of the ANN chains
+    (residual table, probe table, ADC scores; trained codebooks are
+    collected to the driver instead, see :func:`_codebook`) so every
+    downstream plan branch reads the SAME materialized result instead
+    of re-deriving its subtree —
     before this, each reference (and each Lloyd iteration's lineage)
     replayed the full training DAG, multiplying corpus passes.
     ReusedExchange sometimes dedupes these by luck, but AQE re-planning
@@ -1206,41 +1209,180 @@ def _d2_sub(a: str, b: str, s: str = "s") -> Column:
     return F.expr(terms)
 
 
+# per-task intermediate budget of the centroid-assign kernel: each
+# (rows x centroids) int64 distance block is capped at this many bytes
+_ASSIGN_BLOCK_BYTES = 1024 * 1024
+_I64_MAX = 2**63 - 1
+
+
+class _Codebook(NamedTuple):
+    """A codebook collected to the driver once: ``df`` is the local
+    relation every downstream join reads (so the Lloyd lineage that
+    produced it is never replayed), ``books`` the per-subspace
+    ``(ids ascending, int64 centroid matrix)`` pairs the assign kernel
+    captures."""
+
+    df: DataFrame
+    books: tuple
+
+
+def _books(tbl, code: str) -> tuple:
+    """Per-subspace ``(ids, centroids)`` from an Arrow codebook table
+    with columns ``code``, ``cfx`` and, for a product quantizer, ``s``
+    (subspaces 0 .. S-1; no ``s`` column means one full-vector space).
+    Ids come out ascending, which makes argmin's first-minimum rule the
+    packed-MIN tie-break (lowest centroid id). Ids may have gaps:
+    Lloyd drops empty clusters."""
+    import numpy as np
+
+    from netcdf4_variable_streamer_spark.functions.arrow_np import (
+        column_i64,
+        list_matrix_i64,
+    )
+
+    tbl = tbl.combine_chunks()
+    if tbl.num_rows == 0:
+        return ()
+    rb = tbl.to_batches()[0]
+    ids = column_i64(rb, code)
+    cents = list_matrix_i64(rb, "cfx")
+    s = (
+        column_i64(rb, "s")
+        if "s" in tbl.column_names
+        else np.zeros(len(ids), dtype=np.int64)
+    )
+    o = np.lexsort((ids, s))
+    ids, cents, s = ids[o], cents[o], s[o]
+    return tuple(
+        (ids[s == k], cents[s == k]) for k in range(int(s.max()) + 1)
+    )
+
+
+def _codebook(cb: DataFrame, code: str) -> _Codebook:
+    """Collect ``cb`` (one Spark job) and re-serve it as a local
+    relation: the driver-side copy of a trained codebook (at most
+    ``_PROD_NLIST_CAP`` x 64 or 8 x 256 x 8 longs, <= 512 KB)."""
+    tbl = cb.toArrow()
+    return _Codebook(cb.sparkSession.createDataFrame(tbl), _books(tbl, code))
+
+
+def _assign_kernel(
+    vcol: str, books: tuple, code: str, carry: tuple, sub_as: str
+):
+    """Arrow-batch nearest-centroid kernel behind mapInArrow, shared by
+    the coarse (one 64-d space) and PQ (eight 8-d subspaces) assigns.
+
+    In: ``(vec_id, vcol[, carried])`` batches; subspace ``k`` of
+    ``vcol`` is elements ``[k*d, (k+1)*d)`` with ``d`` the (common)
+    width of the centroids in ``books``. Out: one row per (input row, subspace),
+    in input order: ``vec_id``, ``s`` (only with more than one
+    subspace), ``code``, then each ``carry`` column — the name
+    ``sub_as`` is the row's own subvector, any other name a long
+    column passed through from the input row.
+
+    Semantics are the packed-MIN rule ``MIN(d2 * pack + id) % pack``
+    the DuckDB oracles use: exact int64 squared L2 against the
+    codebook rows actually present, ties to the lowest centroid id
+    (``books`` ids ascending + argmin's first minimum). Integer sums
+    are exact, so the per-dimension accumulation order is immaterial.
+    A per-row argmin needs no ``groupBy``: no Exchange, no packed key,
+    no ``min_by``.
+
+    Overflow: NumPy int64 wraps silently where Spark's ANSI long
+    arithmetic throws, so each batch raises OverflowError before any
+    distance is computed unless ``d * (max|x| + max|c|)^2 <= 2^63 - 1``
+    — every term is ``(x - c)^2 <= (max|x| + max|c|)^2`` and a distance
+    sums ``d`` of them (checked in Python ints, which cannot wrap).
+
+    Peak memory: rows are processed in blocks of at most
+    ``_ASSIGN_BLOCK_BYTES / (8 x centroids)`` rows, so each int64
+    (rows x centroids) accumulator — and its one same-shape
+    squared-difference temporary — stays within the cap whatever the
+    batch size; codebook sizes are capped by their keys (one row of
+    1023 centroids is 8 KB).
+
+    The kernel references no module-level function, so workers unpickle
+    it without importing the operator catalog."""
+
+    def absmax(a) -> int:
+        return max(abs(int(a.max())), abs(int(a.min())))
+
+    mc = max((absmax(c) for _, c in books), default=0)
+
+    def fn(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        from netcdf4_variable_streamer_spark.functions.arrow_np import (
+            column_i64,
+            list_matrix_i64,
+        )
+
+        n_sub = len(books)
+        if not n_sub:  # empty codebook: no assignment, as a cross join
+            for _ in batches:
+                pass
+            return
+        d = books[0][1].shape[1]
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            x = list_matrix_i64(batch, vcol)
+            mx = absmax(x)
+            if d * (mx + mc) ** 2 > _I64_MAX:
+                raise OverflowError(
+                    f"squared L2 over {d} dims of |x| <= {mx} and "
+                    f"|c| <= {mc} can overflow int64"
+                )
+            codes = np.empty((n, n_sub), dtype=np.int64)
+            for k, (ids, cents) in enumerate(books):
+                blk = max(1, _ASSIGN_BLOCK_BYTES // (8 * len(ids)))
+                for b0 in range(0, n, blk):
+                    xb = x[b0 : b0 + blk, k * d : (k + 1) * d]
+                    acc = np.zeros((len(xb), len(ids)), dtype=np.int64)
+                    for j in range(d):
+                        t = xb[:, j : j + 1] - cents[:, j]
+                        t *= t
+                        acc += t
+                    codes[b0 : b0 + blk, k] = ids[acc.argmin(axis=1)]
+            cols = {"vec_id": np.repeat(column_i64(batch, "vec_id"), n_sub)}
+            if n_sub > 1:
+                cols["s"] = np.tile(np.arange(n_sub, dtype=np.int32), n)
+            cols[code] = codes.ravel()
+            for c in carry:
+                if c == sub_as:  # row-major x: subvectors are contiguous
+                    cols[c] = pa.ListArray.from_arrays(
+                        pa.array(np.arange(0, x.size + 1, d, dtype=np.int32)),
+                        pa.array(x.ravel()),
+                    )
+                else:
+                    cols[c] = np.repeat(column_i64(batch, c), n_sub)
+            yield pa.RecordBatch.from_pydict(cols)
+
+    return fn
+
+
 def _pqt_assign(
     e: DataFrame,
-    cb: DataFrame,
-    pack: int = _PQT_PACK,
+    vcol: str,
+    cb: _Codebook,
     carry: tuple = (),
 ) -> DataFrame:
-    """(vec_id, s, c): nearest trained centroid per subspace — integer
-    fixed-point distances, packed-MIN tie-break (centroid id asc).
-    ``pack`` must exceed the codebook size (64 for the 16-entry
-    codebooks; the production-shaped key passes 512 for 256).
-    Distances are unrolled codegen'd arithmetic (round 19, guide
-    §1.3/§4 — see :func:`_d2_span`); the groupBy argmin reduces
-    map-side (partial MIN), so the Exchange carries ~N(vec_id, s)
-    rows, not N x C.
-
-    Round 20: the subspace frame carries the pre-sliced 8-long
-    subvector ``sfx`` instead of the full 64-long ``fxv`` (narrower
-    rows, guide §2.3), and ``carry`` names extra input columns that
-    are constant per (vec_id, s) group and ride through the aggregate
-    via ``min_by`` on the same packed key — so consumers that need
-    them (the Lloyd update's member vector, the code table's coarse
-    list id) no longer join back to the corpus (guide §2.4). min_by
-    is exact here: the packed keys are distinct within a group and
-    the carried value is identical on every row of the group."""
-    p = F.col("d2") * pack + F.col("c")
-    d = e.join(F.broadcast(cb), "s").select(
-        "vec_id",
-        "s",
-        "c",
-        _d2_span("sfx", "cfx", 1, 8).alias("d2"),
-        *carry,
+    """(vec_id, s, c[, carry]): nearest PQ centroid per 8-d subspace of
+    the 64-long fixed-point column ``vcol`` — the :func:`_assign_kernel`
+    with ``cb``'s per-subspace codebooks captured (exact integer
+    distances, packed-MIN tie-break: centroid id asc). ``carry`` may
+    name ``sfx`` (the row's 8-long subvector, the Lloyd update's member
+    value) and long input columns of ``e`` (``cl`` for the code
+    table), so no consumer joins back to the corpus."""
+    ddl = ", ".join(
+        ["vec_id long", "s int", "c long"]
+        + [f"{c} array<long>" if c == "sfx" else f"{c} long" for c in carry]
     )
-    return d.groupBy("vec_id", "s").agg(
-        (F.min(p) % pack).alias("c"),
-        *[F.min_by(c, p).alias(c) for c in carry],
+    keep = [c for c in carry if c != "sfx"]
+    return e.select("vec_id", vcol, *keep).mapInArrow(
+        _assign_kernel(vcol, cb.books, "c", carry, "sfx"), ddl
     )
 
 
@@ -1250,13 +1392,12 @@ def _pqt_update(asg: DataFrame) -> DataFrame:
     sums, one correctly-rounded double division, FLOOR. Empty
     clusters simply drop out (both engines see the same survivors).
 
-    Round 20 (guide §2.4): consumes the member subvector ``sfx`` that
-    :func:`_pqt_assign` carried through the argmin aggregate, so the
-    per-round join back to the corpus (one exchange at scale plus a
-    corpus re-scan per Lloyd round) is gone — assign and update now
-    share the one (vec_id, s)-keyed exchange. Same longs, same sums:
-    posexplode of sfx yields exactly the (dim, value) rows the old
-    explode(sequence)+element_at form produced.
+    Consumes the member subvector ``sfx`` that :func:`_pqt_assign`'s
+    kernel emits beside each code, so no round joins back to the
+    corpus; the assign is a map-side kernel with no exchange of its
+    own, and this (s, c, j)-keyed aggregate is the round's only
+    shuffle. posexplode of sfx yields exactly the (dim, value) rows
+    the old explode(sequence)+element_at form produced.
 
     Round 19: stays the dim explode + (s, c, j) aggregate +
     array_sort re-collect. The "wide-sum" rewrite (8 per-dim SUM
@@ -1288,57 +1429,51 @@ def _pqt_update(asg: DataFrame) -> DataFrame:
     )
 
 
-def _pqt_chain(
-    spark: SparkSession,
-    sf_dir: str,
-    ckpt: frozenset = frozenset({"cb", "codes"}),
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(fxe, trained codebook, final codes) — the shared DAG of the
-    training and trained-recall keys. ``ckpt`` names the artifacts
-    the caller consumes more than once (train-once plan contract,
-    see the loop comment below)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _fx64(F.col("embedding")).alias("fxv")
-    )
-    sub = e.select(
-        "vec_id",
-        "fxv",
-        F.explode(
-            F.array(*[F.lit(s) for s in range(_PQ_S)])
-        ).alias("s"),
-    ).select(
-        "vec_id",
-        "s",
-        F.slice(F.col("fxv"), F.col("s") * 8 + 1, 8).alias("sfx"),
-    )
-    cb = (
-        e.filter(F.col("vec_id") < _PQT_C)
+def _pq_init(df: DataFrame, vcol: str, n: int) -> DataFrame:
+    """(s, c, cfx) init codebook: the 8-long subvectors of the first
+    ``n`` vectors of ``vcol`` (c = vec_id), mirrored by the oracles'
+    ``cb0``/``rcb0``."""
+    return (
+        df.filter(F.col("vec_id") < n)
         .select(
             F.col("vec_id").alias("c"),
-            "fxv",
+            vcol,
             F.explode(
                 F.array(*[F.lit(s) for s in range(_PQ_S)])
             ).alias("s"),
         )
         .select(
-            "s", "c", F.slice(F.col("fxv"), F.col("s") * 8 + 1, 8).alias("cfx")
+            "s", "c", F.slice(F.col(vcol), F.col("s") * 8 + 1, 8).alias("cfx")
         )
     )
-    for _ in range(_PQT_ITERS):
-        asg = _pqt_assign(sub, cb, carry=("sfx",))
-        cb = _pqt_update(asg)
-    # Checkpoint exactly what the CALLER's DAG consumes more than once
-    # (``ckpt``) — a checkpoint on a single-consumer artifact is pure
-    # overhead at every scale (eager plan + RDD materialization,
-    # measured +50% on the linear training keys), while one on a
-    # multi-consumer artifact saves a full corpus pass per extra
-    # reference. In-loop iterates are always strictly linear.
-    if "cb" in ckpt:
-        cb = _train_once(cb)
-    codes = _pqt_assign(sub, cb)
-    if "codes" in ckpt:
-        codes = _train_once(codes)
-    return e, cb, codes
+
+
+def _lloyd(init: DataFrame, code: str, iters: int, step) -> _Codebook:
+    """Collect the init codebook, then run ``iters`` Lloyd rounds:
+    ``step(book)`` is one round's assign + update as a DataFrame, and
+    each round's result is collected once, so no round replays the
+    lineage of the rounds before it."""
+    book = _codebook(init, code)
+    for _ in range(iters):
+        book = _codebook(step(book), code)
+    return book
+
+
+def _pqt_chain(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(fxe, trained codebook, final codes) — the shared DAG of the
+    training and trained-recall keys."""
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", _fx64(F.col("embedding")).alias("fxv")
+    )
+    cb = _lloyd(
+        _pq_init(e, "fxv", _PQT_C),
+        "c",
+        _PQT_ITERS,
+        lambda b: _pqt_update(_pqt_assign(e, "fxv", b, carry=("sfx",))),
+    )
+    return e, cb.df, _pqt_assign(e, "fxv", cb)
 
 
 def _pqt_sql() -> str:
@@ -1429,9 +1564,9 @@ FROM {_PQT_CB} b LEFT JOIN members m ON m.s = b.s AND m.c = b.c
         "trained codebook with member counts and centroid checksums "
         "— a wrong tie-break, drifted mean, or lost cluster all "
         "hash-mismatch. Scale: each Lloyd round is ONE corpus pass — "
-        "map-side distance expansion against a broadcast 128-row "
-        "codebook, a (vec, subspace)-keyed argmin, and a "
-        "(subspace, centroid, dim)-keyed mean whose post-combine "
+        "a map-side NumPy argmin kernel (mapInArrow) against the "
+        "128-row codebook, collected to the driver once per round, "
+        "then a (subspace, centroid, dim)-keyed mean whose post-combine "
         "cardinality is 8x16x8 = 1024 rows regardless of corpus "
         "size — the canonical distributed k-means shape; rounds are "
         "a fixed small constant, so training is O(iters) linear "
@@ -1440,13 +1575,12 @@ FROM {_PQT_CB} b LEFT JOIN members m ON m.s = b.s AND m.c = b.c
 def q_sim_pq_train_codebook(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # cb is consumed twice (the report join + the codes lineage);
-    # codes once — checkpoint cb only
-    _, cb, codes = _pqt_chain(spark, sf_dir, ckpt=frozenset({"cb"}))
+    _, cb, codes = _pqt_chain(spark, sf_dir)
     members = codes.groupBy("s", "c").agg(
         F.count(F.lit(1)).alias("n")
     )
-    return cb.join(members, ["s", "c"], "left").select(
+    # members has at most |codebook| rows
+    return cb.join(F.broadcast(members), ["s", "c"], "left").select(
         F.col("s").cast("int").alias("s"),
         F.col("c").cast("long").alias("c"),
         F.coalesce(F.col("n"), F.lit(0)).cast("long").alias(
@@ -1620,35 +1754,20 @@ _CIVF_ITERS = 2  # coarse Lloyd rounds
 
 def _civf_assign(
     e: DataFrame,
-    ccb: DataFrame,
-    pack: int = _PQT_PACK,
+    ccb: _Codebook,
     carry: tuple = (),
 ) -> DataFrame:
-    """(vec_id, cl): nearest TRAINED coarse centroid — full-vector
-    fixed-point distances to the broadcast centroid table, packed-MIN
-    tie-break (centroid id asc). ``pack`` must exceed nlist (64
-    covers the 8/16-list chains; the production-shaped key passes
-    1024 for nlist up to 1023). Distances are unrolled codegen'd
-    arithmetic (round 19, guide §1.3/§4 — see :func:`_d2_span`); the
-    groupBy argmin reduces map-side (partial MIN), so the Exchange
-    carries ~N rows, not N x nlist.
-
-    Round 20: ``carry`` rides group-constant input columns through the
-    aggregate via ``min_by`` on the same packed key (exact: keys are
-    distinct within a group and the carried value is identical on
-    every row of the group) — the Lloyd update reads its member
-    vector straight off the assignment instead of joining back to the
-    corpus (guide §2.4)."""
-    p = F.col("d2") * pack + F.col("cl")
-    d = e.join(F.broadcast(ccb), F.lit(True)).select(
-        "vec_id",
-        "cl",
-        _d2_span("fxv", "cfx", 1, 64).alias("d2"),
-        *carry,
+    """(vec_id, cl[, fxv]): nearest TRAINED coarse centroid — the
+    :func:`_assign_kernel` over the full 64-long fixed-point vector
+    with ``ccb``'s centroid table captured (exact integer distances,
+    packed-MIN tie-break: centroid id asc). ``carry=("fxv",)`` emits
+    the member vector beside its code, for the Lloyd update and the
+    residual build."""
+    ddl = "vec_id long, cl long" + (
+        ", fxv array<long>" if "fxv" in carry else ""
     )
-    return d.groupBy("vec_id").agg(
-        (F.min(p) % pack).alias("cl"),
-        *[F.min_by(c, p).alias(c) for c in carry],
+    return e.select("vec_id", "fxv").mapInArrow(
+        _assign_kernel("fxv", ccb.books, "cl", carry, "fxv"), ddl
     )
 
 
@@ -1658,10 +1777,10 @@ def _civf_update(asg: DataFrame) -> DataFrame:
     :func:`_pqt_update` (integer sums, one correctly-rounded double
     division, FLOOR; empty clusters drop out identically).
 
-    Round 20 (guide §2.4): consumes the member vector ``fxv`` carried
-    through :func:`_civf_assign`'s argmin — no join back to the
-    corpus per round; posexplode(fxv) yields exactly the (dim, value)
-    rows the old explode(sequence)+element_at form produced.
+    Consumes the member vector ``fxv`` that :func:`_civf_assign`'s
+    kernel emits beside each code — no join back to the corpus per
+    round; posexplode(fxv) yields exactly the (dim, value) rows the
+    old explode(sequence)+element_at form produced.
 
     Round 19: stays the dim explode + (cl, j) aggregate — the 64-SUM
     wide-aggregate rewrite measured 2-3x slower end-to-end; see the
@@ -1686,7 +1805,6 @@ def _civf_chain(
     spark: SparkSession,
     sf_dir: str,
     nlist: int = _CIVF_NLIST,
-    ckpt: frozenset = frozenset({"ccb", "assign"}),
     recall_carry: bool = False,
 ):
     """(fxe, trained coarse centroids, assignment, probe_rank): the
@@ -1694,35 +1812,31 @@ def _civf_chain(
     centroid table comes out of ``_CIVF_ITERS`` full-vector Lloyd
     rounds (init = first ``nlist`` vectors) instead of the raw
     first-4-vectors fixture. ``nlist`` parameterizes the consumer:
-    8 for the trained IVF-PQ chain, 16 for SemDeDup clustering."""
+    8 for the trained IVF-PQ chain, 16 for SemDeDup clustering,
+    floor(sqrt(N)) for the production-shaped chain. The centroid table
+    is returned as the collected local relation."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _fx64(F.col("embedding")).alias("fxv")
     )
-    ccb = e.filter(F.col("vec_id") < nlist).select(
-        F.col("vec_id").alias("cl"), F.col("fxv").alias("cfx")
+    ccb = _lloyd(
+        e.filter(F.col("vec_id") < nlist).select(
+            F.col("vec_id").alias("cl"), F.col("fxv").alias("cfx")
+        ),
+        "cl",
+        _CIVF_ITERS,
+        lambda b: _civf_update(_civf_assign(e, b, carry=("fxv",))),
     )
-    for _ in range(_CIVF_ITERS):
-        asg = _civf_assign(e, ccb, carry=("fxv",))
-        ccb = _civf_update(asg)
-    # checkpoint exactly the caller's multi-consumed artifacts
-    # (see the _pqt_chain loop comment for the measured rationale)
-    if "ccb" in ckpt:
-        ccb = _train_once(ccb)
-    # recall_carry (round 20, guide §2.4): the recall pipeline derives
-    # residuals from (assign x ccb) and query residuals from the probe
-    # table — carrying the member/query vectors through the argmin and
-    # the probe window lets _ivfpq_recall_frame build both WITHOUT
-    # joining back to the corpus (and drops the assign checkpoint: the
-    # carried assign has a single consumer, the res build, which IS
-    # checkpointed). Same values ride along; no arithmetic changes.
+    # recall_carry: the recall pipeline derives residuals from
+    # (assign x ccb) and query residuals from the probe table —
+    # carrying the member/query vectors through the argmin and the
+    # probe window lets _ivfpq_recall_frame build both WITHOUT joining
+    # back to the corpus. Same values ride along; no arithmetic changes.
     assign = _civf_assign(
         e, ccb, carry=("fxv",) if recall_carry else ()
     )
-    if "assign" in ckpt and not recall_carry:
-        assign = _train_once(assign)
     qd = (
         e.filter(F.col("vec_id") < N_QUERIES)
-        .join(F.broadcast(ccb), F.lit(True))
+        .join(F.broadcast(ccb.df), F.lit(True))
         .select(
             F.col("vec_id").alias("q_id"),
             "cl",
@@ -1739,7 +1853,7 @@ def _civf_chain(
         "prn",
         *(("fxv", "cfx") if recall_carry else ()),
     )
-    return e, ccb, assign, probe_rank
+    return e, ccb.df, assign, probe_rank
 
 
 def _sql_d2full(a: str, b: str) -> str:
@@ -1918,8 +2032,9 @@ FROM {_CIVF_CCB} b LEFT JOIN members m ON m.cl = b.cl
         "trained centroid table with final member counts and "
         "checksums — a drifted mean, wrong tie-break, or lost "
         "cluster all hash-mismatch. Scale: each round is ONE corpus "
-        "pass (map-side distances against a broadcast 8-row table, "
-        "a vec-keyed argmin, a (cl, dim)-keyed mean with 8x64 = 512 "
+        "pass (a map-side NumPy argmin kernel, mapInArrow, against "
+        "the 8-row table collected to the driver once per round — no "
+        "shuffle — then a (cl, dim)-keyed mean with 8x64 = 512 "
         "post-combine rows regardless of corpus size); at 100 TB "
         "this is exactly distributed k-means with a KB-scale model, "
         "the standard IVF build (FAISS trains on a sample; the "
@@ -1928,13 +2043,10 @@ FROM {_CIVF_CCB} b LEFT JOIN members m ON m.cl = b.cl
 def q_sim_ivf_train_coarse(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # ccb is consumed twice (the report join + the assign lineage);
-    # assign once — checkpoint ccb only
-    _, ccb, assign, _ = _civf_chain(
-        spark, sf_dir, ckpt=frozenset({"ccb"})
-    )
+    _, ccb, assign, _ = _civf_chain(spark, sf_dir)
     members = assign.groupBy("cl").agg(F.count(F.lit(1)).alias("n"))
-    return ccb.join(members, "cl", "left").select(
+    # members has at most nlist rows
+    return ccb.join(F.broadcast(members), "cl", "left").select(
         F.col("cl").cast("long").alias("cl"),
         F.coalesce(F.col("n"), F.lit(0)).cast("long").alias(
             "n_members"
@@ -2104,7 +2216,6 @@ def _ivfpq_recall_frame(
     assign: DataFrame,
     probes: DataFrame,
     pq_c: int,
-    pq_pack: int,
     m_exact: str,
     m_adc: str,
     exact_floor: float,
@@ -2116,61 +2227,31 @@ def _ivfpq_recall_frame(
     integer coarse residuals), ADC serving over probed lists, exact
     sampled-query ground truth, and the recall@{1,3,5} frame — the
     body of the round-17 trained key, parameterized so the round-18
-    production-shaped key reuses it verbatim at its quantizer scale."""
+    production-shaped key reuses it verbatim at its quantizer scale.
+    ``ccb`` is the collected coarse centroid table."""
     # probes feeds the ADC LUT build AND the exact-pruning branch;
     # it carries the query vector and probed centroid (fxv, cfx), so
     # the LUT's query residuals need no join back to the corpus
-    # (round 20, guide §2.4)
     probes = _train_once(probes)
     rfx = F.zip_with(
         F.col("fxv"), F.col("cfx"), lambda x, c: x - c
     )
-    # assign carries the member vector through its argmin (round 20),
-    # so the residual table derives from assign x broadcast(ccb)
-    # directly — no corpus join; assign's single consumer is this
-    # build, so only res is checkpointed (the exact-pruning branch
-    # reads (vec_id, cl) off res below)
+    # assign carries the member vector beside its code, so the
+    # residual table derives from assign x broadcast(ccb) directly —
+    # no corpus join; res feeds the residual Lloyd rounds, the code
+    # table and the exact-pruning branch, so it is checkpointed
     res = _train_once(
         assign.join(F.broadcast(ccb), "cl")
         .select("vec_id", "cl", rfx.alias("rfx"))
     )
-    sub = res.select(
-        "vec_id",
-        "cl",
-        "rfx",
-        F.explode(
-            F.array(*[F.lit(s) for s in range(_PQ_S)])
-        ).alias("s"),
-    ).select(
-        "vec_id",
-        "cl",
-        "s",
-        F.slice(F.col("rfx"), F.col("s") * 8 + 1, 8).alias("sfx"),
+    rcb = _lloyd(
+        _pq_init(res, "rfx", pq_c),
+        "c",
+        _PQT_ITERS,
+        lambda b: _pqt_update(_pqt_assign(res, "rfx", b, carry=("sfx",))),
     )
-    rcb = (
-        res.filter(F.col("vec_id") < pq_c)
-        .select(
-            F.col("vec_id").alias("c"),
-            "rfx",
-            F.explode(
-                F.array(*[F.lit(s) for s in range(_PQ_S)])
-            ).alias("s"),
-        )
-        .select(
-            "s",
-            "c",
-            F.slice(F.col("rfx"), F.col("s") * 8 + 1, 8).alias("cfx"),
-        )
-    )
-    for _ in range(_PQT_ITERS):
-        asg = _pqt_assign(sub, rcb, pack=pq_pack, carry=("sfx",))
-        rcb = _pqt_update(asg)
-    # the trained residual codebook feeds the final assign AND the
-    # per-query LUT; in-loop iterates stay linear (see _pqt_chain)
-    rcb = _train_once(rcb)
-    # cl rides through the argmin (carry) instead of a join back to
-    # res — one exchange less on the code table (r20, guide §2.4)
-    codes = _pqt_assign(sub, rcb, pack=pq_pack, carry=("cl",))
+    # cl rides beside each code instead of a join back to res
+    codes = _pqt_assign(res, "rfx", rcb, carry=("cl",))
     qres = probes.select(
         "q_id",
         "cl",
@@ -2188,7 +2269,7 @@ def _ivfpq_recall_frame(
                 F.array(*[F.lit(s) for s in range(_PQ_S)])
             ).alias("s"),
         )
-        .join(F.broadcast(rcb), "s")
+        .join(F.broadcast(rcb.df), "s")
         .select("q_id", "cl", "s", "c", lut_d2.alias("d2"))
     )
     scored = (
@@ -2344,13 +2425,13 @@ def q_sim_ivfpq_trained_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     e, ccb, assign, probe_rank = _civf_chain(
-        spark, sf_dir, ckpt=frozenset({"ccb"}), recall_carry=True
+        spark, sf_dir, recall_carry=True
     )
     probes = probe_rank.filter(F.col("prn") <= _CIVF_NPROBE).select(
         "q_id", "cl", "fxv", "cfx"
     )
     return _ivfpq_recall_frame(
-        spark, e, ccb, assign, probes, _PQT_C, _PQT_PACK,
+        spark, e, ccb, assign, probes, _PQT_C,
         "ivf_exact_trained", "ivfpq_adc_trained",
         _CIVF_EXACT_FLOOR, _CIVF_ADC_FLOOR,
     )
@@ -2358,9 +2439,9 @@ def q_sim_ivfpq_trained_recall(
 
 # --- production-shaped trained IVF-PQ (round 18, VERDICT r17 #4) ----------
 _PROD_C = 256  # PQ codebook entries per subspace (production scale)
-_PROD_PACK = 512  # packed-argmin base > _PROD_C
-_PROD_CPACK = 1024  # coarse packed-argmin base > the nlist cap
-_PROD_NLIST_CAP = 1023  # keeps d2 * pack inside int64 (see doc)
+_PROD_PACK = 512  # oracle packed-argmin base > _PROD_C
+_PROD_CPACK = 1024  # oracle coarse packed-argmin base > the nlist cap
+_PROD_NLIST_CAP = 1023  # keeps the oracle's d2 * pack inside int64
 # floors set below the values measured at sf0.01 (500 vectors,
 # nlist=22, nprobe=2): exact pruning 0.93@5, raw ADC 0.52@5 (0.20@1),
 # ADC+refine 0.93@5 — see tests/test_llm_ops.py; the
@@ -2410,15 +2491,17 @@ WITH {_PROD_CTES},
         f"at the 10x fixture), nprobe = max(1, nlist // 8) (a ~12% "
         f"probe fraction), and {_PROD_C}-entry residual PQ codebooks "
         f"(the k=256 single-byte-code point of Jegou et al.'s PQ) "
-        f"with packed-argmin bases widened to match ({_PROD_PACK} "
-        f"subspace / {_PROD_CPACK} coarse; nlist is capped at "
-        f"{_PROD_NLIST_CAP} so d2*pack stays inside int64 — past "
-        "that, production swaps the packed MIN for a struct-ordered "
-        "min, same semantics). Both engines derive nlist/nprobe from "
-        "COUNT(*) — Spark as a broadcast 1-row params table joined "
-        "into the centroid init and probe filters (fully "
-        "declarative, no driver-side collect), DuckDB as scalar "
-        "subqueries — so the key is one fixed program that "
+        f"with the oracle's packed-argmin bases widened to match "
+        f"({_PROD_PACK} subspace / {_PROD_CPACK} coarse; nlist is "
+        f"capped at {_PROD_NLIST_CAP} so the oracle's d2*pack stays "
+        "inside int64). Spark assigns with a NumPy argmin kernel "
+        "(mapInArrow) that needs no packing: exact int64 distances, "
+        "ties to the lowest centroid id, the same semantics. Both "
+        "engines derive nlist/nprobe from COUNT(*) — Spark collects "
+        "the 1-row params to the driver, together with each Lloyd "
+        "round's codebook (the kernels capture it and every "
+        "downstream join reads that collected table), DuckDB as "
+        "scalar subqueries — so the key is one fixed program that "
         "re-parameterizes itself at any corpus size. The chain adds "
         f"the third production serving stage, REFINE: exact rescore "
         f"of the ADC top-{_PROD_RERANK_R} shortlist (FAISS's "
@@ -2442,11 +2525,9 @@ WITH {_PROD_CTES},
 def q_sim_ivfpq_production_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _fx64(F.col("embedding")).alias("fxv")
-    )
-    params = (
-        e.agg(F.count(F.lit(1)).alias("n"))
+    nlist, nprobe = (
+        load_table(spark, sf_dir, "embeddings")
+        .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.least(
                 F.floor(F.sqrt(F.col("n"))).cast("long"),
@@ -2460,41 +2541,16 @@ def q_sim_ivfpq_production_recall(
                 F.floor(F.col("nlist") / F.lit(8)).cast("long"),
             ).alias("nprobe"),
         )
+        .first()
     )
-    params = _train_once(params)
-    ccb = e.join(
-        F.broadcast(params), F.col("vec_id") < F.col("nlist")
-    ).select(F.col("vec_id").alias("cl"), F.col("fxv").alias("cfx"))
-    for _ in range(_CIVF_ITERS):
-        asg = _civf_assign(e, ccb, pack=_PROD_CPACK, carry=("fxv",))
-        ccb = _civf_update(asg)
-    # multi-consumer artifacts only (see _pqt_chain); assign carries
-    # fxv for the res build and stays un-checkpointed — its single
-    # consumer, the residual table, is the checkpointed artifact
-    # (round 20, guide §2.4)
-    ccb = _train_once(ccb)
-    assign = _civf_assign(e, ccb, pack=_PROD_CPACK, carry=("fxv",))
-    qd = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .join(F.broadcast(ccb), F.lit(True))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            "cl",
-            _d2_span("fxv", "cfx", 1, 64).alias(
-                "d2"
-            ),
-            "fxv",
-            "cfx",
-        )
+    e, ccb, assign, probe_rank = _civf_chain(
+        spark, sf_dir, nlist=nlist, recall_carry=True
     )
-    wp = Window.partitionBy("q_id").orderBy(F.asc("d2"), F.asc("cl"))
-    probes = (
-        qd.withColumn("prn", F.row_number().over(wp))
-        .join(F.broadcast(params), F.col("prn") <= F.col("nprobe"))
-        .select("q_id", "cl", "fxv", "cfx")
+    probes = probe_rank.filter(F.col("prn") <= nprobe).select(
+        "q_id", "cl", "fxv", "cfx"
     )
     return _ivfpq_recall_frame(
-        spark, e, ccb, assign, probes, _PROD_C, _PROD_PACK,
+        spark, e, ccb, assign, probes, _PROD_C,
         "ivf_exact_prod", "ivfpq_adc_prod",
         _PROD_EXACT_FLOOR, _PROD_ADC_FLOOR,
         rerank=("ivfpq_refine_prod", _PROD_RERANK_R,
@@ -2632,12 +2688,12 @@ def _exact_pairs_kernel(sf_dir: str, tau: float):
     PASS the threshold ever cross the Python boundary back.
 
     Peak-memory bound (round 20, VERDICT r19 #3): the dense dot block
-    is computed over BUILD-SIDE ROW BLOCKS of at most
-    ``_PAIRS_BLOCK_BYTES / (8 * batch_rows)`` rows, so the per-task
-    intermediate is O(batch_rows x block) ~ ``_PAIRS_BLOCK_BYTES``
-    (64 MB) regardless of corpus size N — only the N x dims build
-    matrix itself (the same fits-in-memory constraint the broadcast
-    join imposed) still scales with N.  Blocking build ROWS leaves
+    is computed over blocks of at most ``_PAIRS_BLOCK_BYTES / 8``
+    batch rows x ``_PAIRS_BLOCK_BYTES / (8 * block_rows)`` build rows,
+    so each float64 dot block stays within ``_PAIRS_BLOCK_BYTES``
+    (64 MB) for any batch size and any corpus size N — only the N x
+    dims build matrix itself (the same fits-in-memory constraint the
+    broadcast join imposed) still scales with N.  Blocking ROWS leaves
     every pair's dimension fold untouched (each (i, j) cell still
     accumulates d = 0..63 left to right), and a final lexsort restores
     the exact unblocked (i asc, j asc) output order."""
@@ -2677,21 +2733,24 @@ def _exact_pairs_kernel(sf_dir: str, tau: float):
             for d in range(dims):  # left-to-right fold
                 xacc += X[:, d] * X[:, d]
             xn = np.sqrt(xacc)
-            blk = max(1024, _PAIRS_BLOCK_BYTES // (8 * len(ids)))
+            rows = max(1, min(len(ids), _PAIRS_BLOCK_BYTES // 8))
+            blk = max(1, _PAIRS_BLOCK_BYTES // (8 * rows))
             parts = []
-            for b0 in range(0, n_all, blk):
-                b1 = min(b0 + blk, n_all)
-                Mb = M[b0:b1]
-                dot = np.zeros((len(ids), b1 - b0))
-                for d in range(dims):  # left-to-right fold per pair
-                    dot += X[:, d : d + 1] * Mb[:, d]
-                cos = dot / (xn[:, None] * nrm_all[None, b0:b1])
-                keep = (
-                    ids[:, None] < ids_all[None, b0:b1]
-                ) & (cos >= tau)
-                i, j = np.nonzero(keep)
-                if len(i):
-                    parts.append((i, j + b0, cos[i, j]))
+            for a0 in range(0, len(ids), rows):
+                a1 = min(a0 + rows, len(ids))
+                for b0 in range(0, n_all, blk):
+                    b1 = min(b0 + blk, n_all)
+                    Mb = M[b0:b1]
+                    dot = np.zeros((a1 - a0, b1 - b0))
+                    for d in range(dims):  # left-to-right fold per pair
+                        dot += X[a0:a1, d : d + 1] * Mb[:, d]
+                    cos = dot / (xn[a0:a1, None] * nrm_all[None, b0:b1])
+                    keep = (
+                        ids[a0:a1, None] < ids_all[None, b0:b1]
+                    ) & (cos >= tau)
+                    i, j = np.nonzero(keep)
+                    if len(i):
+                        parts.append((i + a0, j + b0, cos[i, j]))
             if parts:
                 bi = np.concatenate([p[0] for p in parts])
                 bj = np.concatenate([p[1] for p in parts])

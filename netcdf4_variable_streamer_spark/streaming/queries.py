@@ -122,13 +122,12 @@ def _overlap_jobs(*thunks) -> None:
         th.join()
     if errs:
         # surface every sibling failure, not just the first (ADVICE
-        # r19): the first error propagates, the rest ride along as
-        # explicitly chained context
-        first, rest = errs[0], errs[1:]
-        if rest:
-            raise first from ExceptionGroup(
-                f"{len(rest)} sibling overlapped write(s) also failed",
-                rest,
+        # r19): the first error propagates with its own cause chain
+        # intact, and each sibling rides along as a note on it
+        first = errs[0]
+        for e in errs[1:]:
+            first.add_note(
+                f"sibling overlapped write also failed: {e!r}"
             )
         raise first
 

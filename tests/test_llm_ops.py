@@ -230,6 +230,202 @@ def test_exact_pairs_kernel_bit_identical(check):
     assert got == want  # same pairs AND bit-equal doubles
 
 
+def test_exact_pairs_kernel_block_cap(monkeypatch):
+    """The exact-pairs kernel's 64 MB bound holds for ANY batch size:
+    with ``_PAIRS_BLOCK_BYTES`` lowered until one batch spans many
+    batch-row AND build-row blocks, the output stays bit-identical to
+    the default run and every dense dot block fits the cap."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from netcdf4_variable_streamer_spark.operators import similarity as sim
+    from tests.conftest import SF_DIR
+
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+    tbl = pq.read_table(
+        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
+    )
+
+    def run():
+        return [
+            b.to_pydict()
+            for b in sim._exact_pairs_kernel(sf_dir, sim.TAU)(tbl.to_batches())
+        ]
+
+    want = run()
+    assert sum(len(b["v1"]) for b in want) > 0
+    zeros = np.zeros
+    for cap in (8 * 7, 8 * 40, 8 * 5 * tbl.num_rows):
+        blocks = []
+
+        def spy(shape, *a, **k):
+            if isinstance(shape, tuple) and len(shape) == 2:
+                blocks.append(shape)
+            return zeros(shape, *a, **k)
+
+        monkeypatch.setattr(sim, "_PAIRS_BLOCK_BYTES", cap)
+        monkeypatch.setattr(np, "zeros", spy)
+        got = run()
+        monkeypatch.setattr(np, "zeros", zeros)
+        assert got == want, cap
+        assert len(blocks) > 1, cap
+        assert all(8 * r * c <= cap for r, c in blocks), (cap, blocks)
+
+
+def _packed_min(x, ids, cents, pack):
+    """Reference assign in plain Python: the oracles' packed-MIN rule
+    ``MIN(d2 * pack + id) % pack`` over (id, centroid) pairs."""
+    return min(
+        sum((a - b) ** 2 for a, b in zip(x, c)) * pack + i
+        for i, c in zip(ids, cents)
+    ) % pack
+
+
+def _assign_fixture():
+    """Vectors with exact d2 ties between centroids whose ids have
+    gaps (as after Lloyd drops empty clusters), codebook rows out of
+    id order. Centroid coordinates are even, so the midpoint of two
+    centroids is an integer vector equidistant from both."""
+    import random
+
+    rng = random.Random(7)
+    cl_ids = [40, 3, 17, 9]  # sparse, unsorted
+    cents = {
+        i: [2 * rng.randrange(-25, 25) for _ in range(64)] for i in cl_ids
+    }
+    vecs = []
+    for v in range(60):
+        if v % 2 == 0:
+            a, b = rng.sample(cl_ids, 2)
+            vecs.append([(p + q) // 2 for p, q in zip(cents[a], cents[b])])
+        else:
+            vecs.append([rng.randrange(-60, 60) for _ in range(64)])
+    return vecs, cents
+
+
+def test_assign_kernel_matches_packed_min_with_ties_and_gaps(monkeypatch):
+    """The centroid-assign kernel (one mapInArrow argmin shared by the
+    coarse and PQ assigns) against the packed-MIN rule computed in
+    plain Python, on a constructed fixture with exact d2 ties and a
+    sparse, unsorted codebook — for the full-vector (coarse) and the
+    8 x 8-d (PQ) shapes, at the default block size and at a cap small
+    enough to split every batch into single-row blocks."""
+    import pyarrow as pa
+
+    from netcdf4_variable_streamer_spark.operators import similarity as sim
+
+    vecs, cents = _assign_fixture()
+    ids = list(cents)
+    batch = pa.RecordBatch.from_pydict({
+        "vec_id": pa.array(range(len(vecs)), pa.int64()),
+        "fxv": pa.array(vecs, pa.list_(pa.int64())),
+        "cl": pa.array([v * 10 for v in range(len(vecs))], pa.int64()),
+    })
+    coarse = sim._books(pa.table({
+        "cl": pa.array(ids, pa.int64()),
+        "cfx": pa.array([cents[i] for i in ids], pa.list_(pa.int64())),
+    }), "cl")
+    # PQ codebook: subspace s of each centroid, ids shifted per s
+    pq_rows = [(s, i + s, cents[i][s * 8 : s * 8 + 8])
+               for i in ids for s in range(8)]
+    pq = sim._books(pa.table({
+        "s": pa.array([r[0] for r in pq_rows], pa.int32()),
+        "c": pa.array([r[1] for r in pq_rows], pa.int64()),
+        "cfx": pa.array([r[2] for r in pq_rows], pa.list_(pa.int64())),
+    }), "c")
+
+    want_cl = [_packed_min(x, ids, [cents[i] for i in ids], 64)
+               for x in vecs]
+    def nearest_two(x):
+        return sorted(
+            sum((a - b) ** 2 for a, b in zip(x, cents[i])) for i in ids
+        )[:2]
+
+    ties = sum(d[0] == d[1] for d in map(nearest_two, vecs))
+    assert ties >= 10  # the fixture really exercises the tie-break
+    want_pq = [
+        (v, s, _packed_min(x[s * 8 : s * 8 + 8], [i + s for i in ids],
+                           [cents[i][s * 8 : s * 8 + 8] for i in ids], 64))
+        for v, x in enumerate(vecs) for s in range(8)
+    ]
+    for cap in (sim._ASSIGN_BLOCK_BYTES, 8):
+        monkeypatch.setattr(sim, "_ASSIGN_BLOCK_BYTES", cap)
+        (out,) = sim._assign_kernel("fxv", coarse, "cl", ("fxv",), "fxv")(
+            iter([batch])
+        )
+        d = out.to_pydict()
+        assert d["vec_id"] == list(range(len(vecs)))
+        assert d["cl"] == want_cl, cap
+        assert d["fxv"] == vecs
+        (out,) = sim._assign_kernel("fxv", pq, "c", ("cl", "sfx"), "sfx")(
+            iter([batch])
+        )
+        d = out.to_pydict()
+        assert list(zip(d["vec_id"], d["s"], d["c"])) == want_pq, cap
+        assert d["cl"] == [v * 10 for v in range(len(vecs)) for _ in range(8)]
+        assert d["sfx"] == [x[s * 8 : s * 8 + 8] for x in vecs for s in range(8)]
+
+
+def test_assign_through_spark_matches_packed_min(spark):
+    """The same fixture through the Spark path: the codebook collected
+    by ``_codebook`` and the kernel run by mapInArrow inside
+    ``_civf_assign`` give the packed-MIN assignment."""
+    from pyspark.sql import functions as F
+
+    from netcdf4_variable_streamer_spark.operators import similarity as sim
+
+    vecs, cents = _assign_fixture()
+    ids = list(cents)
+    e = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, fxv array<long>"
+    ).repartition(3)
+    cb = sim._codebook(
+        spark.createDataFrame(
+            [(i, cents[i]) for i in ids], "cl long, cfx array<long>"
+        ),
+        "cl",
+    )
+    got = {
+        r.vec_id: r.cl
+        for r in sim._civf_assign(e, cb).orderBy(F.col("vec_id")).collect()
+    }
+    want = {v: _packed_min(x, ids, [cents[i] for i in ids], 64)
+            for v, x in enumerate(vecs)}
+    assert got == want
+    assert sorted(r.cl for r in cb.df.collect()) == sorted(ids)
+
+
+def test_assign_kernel_raises_on_int64_overflow_range():
+    """NumPy int64 wraps silently where Spark's ANSI long arithmetic
+    throws: inputs whose squared-L2 sum could leave int64 must raise
+    before any distance is computed, and the largest safe magnitudes
+    must not."""
+    import pyarrow as pa
+
+    from netcdf4_variable_streamer_spark.operators import similarity as sim
+
+    books = sim._books(pa.table({
+        "cl": pa.array([0], pa.int64()),
+        "cfx": pa.array([[0] * 64], pa.list_(pa.int64())),
+    }), "cl")
+    kern = sim._assign_kernel("fxv", books, "cl", (), "fxv")
+
+    def batch(v):
+        return pa.RecordBatch.from_pydict({
+            "vec_id": pa.array([0], pa.int64()),
+            "fxv": pa.array([[v] * 64], pa.list_(pa.int64())),
+        })
+
+    safe = int(((2**63 - 1) // 64) ** 0.5) - 1
+    (out,) = kern(iter([batch(-safe)]))
+    assert out.to_pydict()["cl"] == [0]
+    for v in (safe * 2, -(2**40), 2**62):
+        with pytest.raises(OverflowError):
+            list(kern(iter([batch(v)])))
+
+
 def test_threshold_lsh_subset_and_recall(check):
     """LSH-prefiltered threshold pairs vs the exact quadratic baseline:
     precision is 1 by construction (exact verify on candidates) so every

@@ -279,9 +279,11 @@ def test_semantic_dedup_broadcast_assign_no_cartesian(spark):
 
 
 def test_semantic_dedup_trained_keeps_posture(spark):
-    # the trained twin keeps the family posture: Lloyd rounds are
-    # broadcast-driven map-side passes, the pair stage stays an
-    # equi-join on cluster_id — no Python row path, no cartesian
+    # the trained twin keeps the family posture: each Lloyd assign is
+    # a map-side mapInArrow argmin kernel over Arrow batches against
+    # the driver-collected codebook (never a row-at-a-time Python UDF),
+    # the pair stage stays an equi-join on cluster_id — no
+    # BatchEvalPython, no cartesian
     df = build(spark, "q_dedup_semantic_trained")
     plans.assert_broadcast_joins(df, at_least=1)
     plans.assert_no_cartesian(df)
@@ -596,10 +598,12 @@ def test_ivfpq_adc_broadcast_no_python(spark):
 
 def test_round16_sim_keys_broadcast_no_python(spark):
     # the round-16 ANN accounting/training chains keep the family
-    # posture: every small side (query block, centroids, codebooks,
-    # LUTs, probe tables, k/method spines) travels as a broadcast,
-    # scoring is JVM integer arithmetic — no Python row path, no
-    # CartesianProduct anywhere
+    # posture: every small side (query block, codebooks, LUTs, probe
+    # tables, member counts, k/method spines) travels as a broadcast;
+    # scoring is JVM integer arithmetic, and the trained keys' centroid
+    # assign is a mapInArrow argmin kernel over Arrow batches — no
+    # row-at-a-time Python UDF (BatchEvalPython), no CartesianProduct
+    # anywhere
     for key in (
         "q_sim_ivfpq_recall",
         "q_sim_pq_train_codebook",
@@ -618,15 +622,17 @@ def test_round16_sim_keys_broadcast_no_python(spark):
 
 def test_round17_trained_ivfpq_broadcast_no_python(spark):
     # the trained IVF-PQ chain keeps the family posture: centroid
-    # tables, residual codebooks, probe tables, LUTs and spines all
-    # travel as broadcasts; Lloyd rounds are map-side expansions +
-    # keyed aggregations; no Python row path, no CartesianProduct
+    # tables, residual codebooks (collected to the driver once per
+    # Lloyd round), probe tables, LUTs and spines all travel as
+    # broadcasts; each Lloyd round is a map-side mapInArrow argmin
+    # kernel + keyed aggregations; no row-at-a-time Python UDF
+    # (BatchEvalPython), no CartesianProduct
     for key in (
         "q_sim_ivf_train_coarse",
         "q_sim_ivfpq_trained_recall",
         # round 18: the production-shaped chain derives nlist/nprobe
-        # from COUNT(*) via a broadcast 1-row params table — same
-        # posture, plus the refine stage's shortlist rescore
+        # from COUNT(*), collected with the codebooks — same posture,
+        # plus the refine stage's shortlist rescore
         "q_sim_ivfpq_production_recall",
     ):
         df = build(spark, key)

@@ -1589,3 +1589,34 @@ def test_substring_ttl_replay_safe(spark, tmp_path):
     import shutil
 
     shutil.rmtree(feed, ignore_errors=True)
+
+
+def test_overlap_jobs_keeps_first_failure_cause(spark):
+    """When two overlapped thunks fail, ``_overlap_jobs`` re-raises the
+    first failure with its own ``__cause__`` intact, and the sibling's
+    failure rides along as a note on it."""
+    import threading
+
+    del spark  # only needs an active SparkContext for InheritableThread
+    started = threading.Event()
+    first = {}
+
+    def fails_first():
+        first["thread"] = threading.current_thread()
+        started.set()
+        try:
+            raise KeyError("root cause")
+        except KeyError as e:
+            raise RuntimeError("write a failed") from e
+
+    def fails_second():
+        # fail only after the first thunk's thread has recorded its error
+        started.wait(10)
+        first["thread"].join(10)
+        raise ValueError("write b failed")
+
+    with pytest.raises(RuntimeError, match="write a failed") as info:
+        sq._overlap_jobs(fails_first, fails_second)
+    assert isinstance(info.value.__cause__, KeyError)
+    assert info.value.__cause__.args == ("root cause",)
+    assert any("write b failed" in n for n in info.value.__notes__)

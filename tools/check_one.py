@@ -1,8 +1,14 @@
-"""Quick single-key strict-mirror check: python .scratch/check_one.py KEY [SF]"""
+"""Quick single-key strict-mirror check: python tools/check_one.py KEY [SF]"""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# this checkout, for the driver and (via PYTHONPATH) the Python workers
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import netcdf4_variable_streamer_spark.operators  # noqa: F401
 import netcdf4_variable_streamer_spark.sources  # noqa: F401
